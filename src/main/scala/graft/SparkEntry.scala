@@ -165,8 +165,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     SkylineOp.skyline(
       spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        // project before the opaque operator so the scan reads only the
-        // key + dim columns (see q_skyline_lineitem).
+        // the select fixes the result's columns; the scan reads only
+        // these either way (see q_skyline_lineitem).
         .select("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_shipdate"),
       lineitemSpec)
 

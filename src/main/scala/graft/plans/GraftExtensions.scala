@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.catalyst.optimizer.ColumnPruning
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
@@ -15,11 +16,7 @@ object SkylineStrategy extends SparkStrategy {
     case sky @ SkylinePlan(_, _, child) =>
       SkylineExec(sky.dims, planLater(child)) :: Nil
     case cube: SkycubePlan =>
-      val names = cube.dimExprs.map {
-        case a: org.apache.spark.sql.catalyst.expressions.NamedExpression => a.name
-        case e => e.sql
-      }
-      SkycubeExec(cube.dims, names, cube.subspaceAttr, planLater(cube.child)) :: Nil
+      SkycubeExec(cube.dims, cube.dimNames, cube.subspaceAttr, planLater(cube.child)) :: Nil
     case _ => Nil
   }
 }
@@ -28,7 +25,11 @@ object SkylineStrategy extends SparkStrategy {
   * skyline uses a subset of the child's columns, push a Project BELOW
   * the skyline keeping only (projected ∪ dim) columns — the scan then
   * prunes to those columns (ReadSchema shrinks). Safe because skyline
-  * filters rows and never reads columns outside its dims.
+  * filters rows and never reads columns outside its dims. Registered
+  * through `spark.experimental`, the rule runs after the optimizer's
+  * own `ColumnPruning`, so it applies that rule to the new child
+  * itself: the Project then reaches the scan through operators such
+  * as the front ends' spreading repartition.
   */
 object SkylineColumnPruning extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
@@ -37,7 +38,7 @@ object SkylineColumnPruning extends Rule[LogicalPlan] {
       val needed = p.references ++ AttributeSet(dimExprs.flatMap(_.references))
       val keep = child.output.filter(needed.contains)
       if (keep.length < child.output.length)
-        Project(projectList, sky.copy(child = Project(keep, child)))
+        Project(projectList, sky.copy(child = ColumnPruning(Project(keep, child))))
       else p
     }
     // Same push-through for the cube: subspace comes from the node
@@ -48,7 +49,7 @@ object SkylineColumnPruning extends Rule[LogicalPlan] {
         p.references ++ AttributeSet(cube.dimExprs.flatMap(_.references))
       val keep = cube.child.output.filter(needed.contains)
       if (keep.length < cube.child.output.length)
-        Project(projectList, cube.copy(child = Project(keep, cube.child)))
+        Project(projectList, cube.copy(child = ColumnPruning(Project(keep, cube.child))))
       else p
     }
   }

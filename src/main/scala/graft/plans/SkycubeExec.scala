@@ -3,22 +3,24 @@ package graft.plans
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, JoinedRow}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.skyline.Gsky
 
-/** Physical operator for [[SkycubePlan]] — the one-scan skycube of
-  * [[graft.skyline.Skycube]] in SparkPlan form:
+/** Physical operator for [[SkycubePlan]], and the one-scan skycube
+  * kernel behind both `SKYCUBE OF` and [[graft.skyline.Skycube.skycube]]:
   *
-  *  - phase 1: ONE pass over the child; per partition, a GSKY buffer
-  *    PER SUBSPACE (2^d − 1 of them, d ≤ 6 enforced at parse) receives
-  *    the row's projected vector — the multi-group combiner trick, so
-  *    the scan/parse cost is paid once for the whole cube;
+  *  - phase 1: ONE pass over the child, sorted by the full-space SFS
+  *    key ([[SkylineDims.sfsOrder]] — still a valid arrival order for
+  *    every projection; eviction handles the rest); per partition, a
+  *    GSKY buffer PER SUBSPACE (2^d − 1 of them, d ≤ 6 enforced by both
+  *    front ends) receives the row's projected vector — the multi-group
+  *    combiner trick, so the scan/parse cost is paid once for the cube;
   *  - phase 2: local survivors shuffle ON THE SUBSPACE MASK (each
-  *    subspace's final merge is its own parallel task) and re-merge.
+  *    subspace's final merge is its own parallel task), are SFS-sorted
+  *    per subspace and re-merged.
   *
   * Output rows are the child row prefixed with the subspace label
   * (dim names joined "+", clause order). Rows with a NULL/NaN dim are
@@ -37,13 +39,12 @@ case class SkycubeExec(
       org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(Seq(subspaceAttr))
 
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(SkylineDims.sfsOrder(dims))
+
   override protected def doExecute(): RDD[InternalRow] = {
-    val bound = dims.map { case (e, sign) =>
-      (BindReferences.bindReference(e, child.output), sign.toDouble)
-    }
-    val d = bound.length
+    val (dims, input, names) = (this.dims, child.output, dimNames)
+    val d = dims.length
     val masks: Array[Int] = (1 until (1 << d)).toArray
-    val names = dimNames
 
     def project(vec: Array[Double], mask: Int): Array[Double] = {
       val out = new Array[Double](java.lang.Integer.bitCount(mask))
@@ -57,32 +58,21 @@ case class SkycubeExec(
 
     val local: RDD[(Int, (Array[Double], InternalRow))] =
       child.execute().mapPartitions { it =>
-        val bufs = masks.map(m => m -> Gsky.emptyBuf[InternalRow]).toMap
+        val vecOf = SkylineDims.vectors(dims, input)
+        val bufs = masks.map(_ => Gsky.emptyBuf[InternalRow])
         it.foreach { row =>
-          val vec = new Array[Double](d)
-          var ok = true
-          var i = 0
-          while (ok && i < d) {
-            val v = bound(i)._1.eval(row)
-            if (v == null) ok = false
-            else {
-              val x = v match {
-                case dd: Double => dd
-                case f: Float => f.toDouble
-                case n: Number => n.doubleValue()
-                case other => other.toString.toDouble
-              }
-              if (x.isNaN) ok = false else vec(i) = x * bound(i)._2
+          val vec = vecOf(row)
+          if (vec != null) {
+            var copied: InternalRow = null
+            var k = 0
+            while (k < masks.length) {
+              copied = SkylineDims.insertCopy(bufs(k), project(vec, masks(k)), row, copied)
+              k += 1
             }
-            i += 1
-          }
-          if (ok) {
-            val copied = row.copy()
-            masks.foreach(m => Gsky.insert(bufs(m), project(vec, m), copied))
           }
         }
-        bufs.iterator.flatMap { case (m, buf) =>
-          buf.iterator.map { case (v, r) => (m, (v, r)) }
+        masks.iterator.zip(bufs.iterator).flatMap { case (m, buf) =>
+          buf.iterator.map(p => (m, p))
         }
       }
 
@@ -90,27 +80,19 @@ case class SkycubeExec(
     local
       .partitionBy(new HashPartitioner(masks.length))
       .mapPartitions { it =>
-        val bufs = new java.util.HashMap[Int, Gsky.Buf[InternalRow]]()
-        it.foreach { case (m, (v, r)) =>
-          var buf = bufs.get(m)
-          if (buf == null) { buf = Gsky.emptyBuf[InternalRow]; bufs.put(m, buf) }
-          Gsky.insert(buf, v, r)
-        }
         // Downstream exchanges/serializers require UnsafeRow — project
         // the (label, child-row) join into the output layout. The
         // projection's buffer reuse is safe: every standard consumer
         // copies on buffering.
-        val toUnsafe = org.apache.spark.sql.catalyst.expressions
-          .UnsafeProjection.create(outSchema, outSchema)
-        import scala.jdk.CollectionConverters._
-        bufs.entrySet().asScala.iterator.flatMap { e =>
+        val toUnsafe = UnsafeProjection.create(outSchema, outSchema)
+        it.toSeq.groupMap(_._1)(_._2).iterator.flatMap { case (m, points) =>
           val label = UTF8String.fromString(
-            names.zipWithIndex.collect {
-              case (n, i) if (e.getKey & (1 << i)) != 0 => n
-            }.mkString("+"))
+            names.zipWithIndex.collect { case (n, i) if (m & (1 << i)) != 0 => n }.mkString("+"))
           val left = new GenericInternalRow(Array[Any](label))
           val joined = new JoinedRow
-          e.getValue.iterator.map { case (_, r) => toUnsafe(joined(left, r)) }
+          SkylineDims.sfsSkyline(points.iterator).iterator.map { case (_, r) =>
+            toUnsafe(joined(left, r))
+          }
         }
       }
   }

@@ -4,10 +4,10 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.types.StringType
 
-/** Logical node for the `SKYCUBE OF` SQL clause: the skyline of EVERY
-  * non-empty subspace of `dims`, each output row labeled with its
-  * subspace (dimension names joined "+", in clause order) — the SQL
-  * surface of [[graft.skyline.Skycube]] (Yuan et al., VLDB'05).
+/** Logical skycube node, planned by both the `SKYCUBE OF` clause and
+  * [[graft.skyline.Skycube.skycube]]: the skyline of EVERY non-empty
+  * subspace of `dims`, each output row labeled with its subspace
+  * (dimension names joined "+", in clause order; Yuan et al., VLDB'05).
   *
   * Output = a prepended non-null `subspace` string column + the child
   * output (rows appear once per subspace they win). The subspace
@@ -23,6 +23,14 @@ case class SkycubePlan(
   extends UnaryNode {
 
   def dims: Seq[(Expression, Int)] = dimExprs.zip(signs)
+
+  /** Subspace label parts: the column each dim reads. */
+  def dimNames: Seq[String] = dimExprs.map { e =>
+    e.references.toSeq match {
+      case Seq(a) => a.name
+      case _ => e.sql
+    }
+  }
 
   override def output: Seq[Attribute] = subspaceAttr +: child.output
 

@@ -2,66 +2,52 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import graft.skyline.Gsky
 
-/** Physical operator for [[SkylinePlan]]: the two-phase GSKY plan as a
-  * SparkPlan.
+/** Physical operator for [[SkylinePlan]], and the one two-phase GSKY
+  * kernel behind both `SKYLINE OF` and [[graft.skyline.SkylineOp.skyline]]:
   *
   *  - phase 1: per-partition local skyline (zero shuffle — the
-  *    map-side combine of SkylineOp.twoPhase, itself the reference's
-  *    combiner trick, Skyline.java:408);
-  *  - phase 2: survivors coalesce to one task for the final merge
-  *    (local skylines are orders of magnitude smaller than the input;
-  *    for hostile data the quadtree SkyMr path remains the operator-
-  *    API alternative).
+  *    reference's combiner trick, Skyline.java:408) over the child
+  *    sorted by the SFS key ([[SkylineDims.sfsOrder]]), which
+  *    `requiredChildOrdering` hands to Spark's spillable `SortExec`;
+  *  - phase 2: survivors move to one task, are SFS-sorted in memory and
+  *    merged (local skylines are orders of magnitude smaller than the
+  *    input; for hostile data the quadtree SkyMr path remains the
+  *    operator-API alternative).
   *
-  * Dim expressions are bound against the child's output and evaluated
-  * per row into the MIN-convention vector; rows with a NULL/NaN dim
-  * are dropped (SkylineOp.prepare semantics).
+  * Dim vectors come from [[SkylineDims.vectors]]; rows with a NULL/NaN
+  * dim are dropped (SkylineOp.prepare semantics).
   */
 case class SkylineExec(dims: Seq[(Expression, Int)], child: SparkPlan)
   extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val bound = dims.map { case (e, sign) =>
-      (BindReferences.bindReference(e, child.output), sign.toDouble)
-    }
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(SkylineDims.sfsOrder(dims))
 
-    def localSky(it: Iterator[InternalRow]): Iterator[InternalRow] = {
+  override protected def doExecute(): RDD[InternalRow] = {
+    val (dims, input) = (this.dims, child.output)
+
+    val local = child.execute().mapPartitions { it =>
+      val vecOf = SkylineDims.vectors(dims, input)
       val buf = Gsky.emptyBuf[InternalRow]
       it.foreach { row =>
-        val vec = new Array[Double](bound.length)
-        var ok = true
-        var i = 0
-        while (ok && i < bound.length) {
-          val v = bound(i)._1.eval(row)
-          if (v == null) ok = false
-          else {
-            val d = v match {
-              case d: Double => d
-              case f: Float => f.toDouble
-              case n: Number => n.doubleValue()
-              case other => other.toString.toDouble
-            }
-            if (d.isNaN) ok = false else vec(i) = d * bound(i)._2
-          }
-          i += 1
-        }
-        if (ok) Gsky.insert(buf, vec, row.copy())
+        val vec = vecOf(row)
+        if (vec != null) SkylineDims.insertCopy(buf, vec, row)
       }
       buf.iterator.map(_._2)
     }
-
-    val local = child.execute().mapPartitions(localSky)
     // shuffle=true: plain coalesce(1) is a narrow dependency that would
-    // compute ALL phase-1 partitions serially in the single merged task
-    // (the twoPhase doc's repartition(1)-not-coalesce(1) trap); with a
-    // shuffle only the tiny local skylines move to the merge task.
-    local.coalesce(1, shuffle = true).mapPartitions(localSky)
+    // compute ALL phase-1 partitions serially in the single merge task;
+    // with a shuffle only the tiny local skylines move to it. Shuffled
+    // rows arrive as fresh objects, so the merge buffers them uncopied.
+    local.coalesce(1, shuffle = true).mapPartitions { it =>
+      val vecOf = SkylineDims.vectors(dims, input)
+      SkylineDims.sfsSkyline(it.map(row => (vecOf(row), row))).iterator.map(_._2)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): SkylineExec =

@@ -3,9 +3,10 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 
-/** Logical node for the `SKYLINE OF` SQL clause (after the EDBT'23
-  * "Integration of Skyline Queries into Spark SQL" pattern — PAPERS.md):
-  * keep exactly the child rows not Pareto-dominated under `dims`.
+/** Logical skyline node (after the EDBT'23 "Integration of Skyline
+  * Queries into Spark SQL" pattern — PAPERS.md), planned by both the
+  * `SKYLINE OF` clause and [[graft.skyline.SkylineOp.skyline]]: keep
+  * exactly the child rows not Pareto-dominated under `dims`.
   *
   * `dims` are (expression, sign) pairs in MIN convention: sign +1 for
   * MIN, −1 for MAX (the reference's value_type encoding,

@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * The clause must be the final clause of the statement. The wrapped
   * base query parses through the delegate (full Spark SQL untouched);
   * the clause becomes a [[SkylinePlan]] with UnresolvedAttribute dims
-  * that the analyzer resolves against the base query's output.
+  * that the analyzer resolves against the base query's output and
+  * type-checks ([[OrderableDim]]).
   * Statements without the clause pass through verbatim.
   */
 class SkylineSqlParser(delegate: ParserInterface) extends ParserInterface {
@@ -91,15 +92,16 @@ object SkylineSqlParser {
   }
 
   /** "a MIN, b MAX" → Seq((attr a, +1), (attr b, −1)) — MIN-convention
-    * signs per the reference's value_type (Range.java:19).
+    * signs per the reference's value_type (Range.java:19). Each dim is
+    * wrapped in [[OrderableDim]], so analysis type-checks it.
     */
   private[plans] def parseDims(clause: String): Seq[(Expression, Int)] =
     clause.split(",").toSeq.map { part =>
       part.trim.split("\\s+").toSeq match {
         case Seq(name, dir) if dir.equalsIgnoreCase("MIN") =>
-          (UnresolvedAttribute.quotedString(name), 1)
+          (OrderableDim(UnresolvedAttribute.quotedString(name)), 1)
         case Seq(name, dir) if dir.equalsIgnoreCase("MAX") =>
-          (UnresolvedAttribute.quotedString(name), -1)
+          (OrderableDim(UnresolvedAttribute.quotedString(name)), -1)
         case _ =>
           throw new IllegalArgumentException(
             s"SKYLINE OF expects '<column> MIN|MAX [, ...]', got: '${part.trim}'")

@@ -46,14 +46,13 @@ private[graft] object RegSkyline {
 
     // Flagship skyline (GSKY two-phase), scoped to one returnflag so the
     // DuckDB NOT-EXISTS oracle stays cheap at sf0.01.
-    // Output columns are projected BEFORE the operator: the skyline
-    // carries whole rows through an opaque mapPartitions, so Catalyst
-    // cannot prune through it — projecting early is what gets
-    // ReadSchema down to the 5 needed columns at the parquet scan.
+    // The select fixes the result's columns (the oracle's). Catalyst
+    // prunes through the skyline node (SkylineColumnPruning), so the
+    // scan reads only these 5 columns either way.
     "q_skyline_lineitem" -> { (s, dir) =>
       val li = Tables.load(s, dir, "lineitem").filter(col("l_returnflag") === "R")
         .select("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_shipdate")
-      SkylineOp.twoPhase(li, lineitemSpec)
+      SkylineOp.skyline(li, lineitemSpec)
         .orderBy("l_orderkey", "l_linenumber")
     },
 
@@ -73,8 +72,8 @@ private[graft] object RegSkyline {
           "l_discount", "l_shipdate")
       val base = r.filter(col("l_orderkey") % 10 =!= 0)
       val delta = r.filter(col("l_orderkey") % 10 === 0)
-      val maintained = SkylineOp.twoPhase(base, lineitemSpec)
-      SkylineOp.twoPhase(maintained.unionByName(delta), lineitemSpec)
+      val maintained = SkylineOp.skyline(base, lineitemSpec)
+      SkylineOp.skyline(maintained.unionByName(delta), lineitemSpec)
         .orderBy("l_orderkey", "l_linenumber")
     },
 
@@ -106,8 +105,8 @@ private[graft] object RegSkyline {
     // IO noise, numbers from interleaved A/B): ~9-15 s, of which the io
     // round trip is ~0.9 s — the rest is the intrinsically large d=9
     // skyline (~10% of input survives). This is the workload SkyMr
-    // exists for: twoPhase takes ~2× longer, deeper trees invert the
-    // win (more cells → quadratically more mayDominate pairs +
+    // exists for: the one-task-merge skyline takes ~2× longer, deeper
+    // trees invert the win (more cells → quadratically more mayDominate pairs +
     // replication fanout at d=9), and spreading the input hurts (the
     // phase-1 combiner reduces better on bigger partitions); one
     // 512-way split over the arriving partitioning is the sweet spot.
@@ -164,7 +163,7 @@ private[graft] object RegSkyline {
     "q_skyline_orders" -> { (s, dir) =>
       val o = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderdate")
-      SkylineOp.twoPhase(o, SkylineSpec(Seq(
+      SkylineOp.skyline(o, SkylineSpec(Seq(
         SkyDim("o_totalprice", Min), SkyDim("o_orderdate", Max))))
         .orderBy("o_orderkey")
     },
@@ -377,7 +376,7 @@ private[graft] object RegSkyline {
       val li = Tables.load(s, dir, "lineitem")
         .filter(col("l_returnflag") === "R" && col("l_linestatus") === "F")
         .select("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_shipdate")
-      SkylineOp.twoPhase(li, SkylineSpec(Seq(
+      SkylineOp.skyline(li, SkylineSpec(Seq(
         SkyDim("l_extendedprice", Min),
         SkyDim("l_discount", Max, missing = Some(0.0)),
         SkyDim("l_shipdate", Min))))
@@ -441,7 +440,7 @@ private[graft] object RegSkyline {
     // The declarative anti-join skyline (p ∈ sky ⟺ no q dominates p,
     // planned as a broadcast nested-loop anti-join) — the O(n²)
     // cross-check form, registered on a deliberately small slice; the
-    // imperative paths (twoPhase/SkyMr/agg) are the scale plans.
+    // imperative paths (skyline/SkyMr/agg) are the scale plans.
     "q_skyline_anti" -> { (s, dir) =>
       val p = Tables.load(s, dir, "part").filter(col("p_brand") === "Brand#13")
         .select("p_partkey", "p_retailprice", "p_size")

@@ -37,15 +37,17 @@ object Gsky {
   /** Insert one point. Either it is dominated by a candidate (dropped),
     * or it enters the buffer, evicting every candidate it dominates.
     * Eviction is swap-remove (O(1)); order of the buffer is not
-    * meaningful. Throws once the buffer would exceed `cap` points —
-    * the anti-correlated blowup guard (see [[DefaultMaxBufferSize]]).
+    * meaningful. Returns whether the point entered the buffer (it is
+    * then the last element). Throws once the buffer would exceed `cap`
+    * points — the anti-correlated blowup guard (see
+    * [[DefaultMaxBufferSize]]).
     */
   def insert[P](buf: Buf[P], v: Array[Double], p: P,
-      cap: Int = DefaultMaxBufferSize): Unit = {
+      cap: Int = DefaultMaxBufferSize): Boolean = {
     var i = 0
     while (i < buf.length) {
       Dominance.compare(buf(i)._1, v) match {
-        case -1 => return // existing candidate dominates the new point
+        case -1 => return false // existing candidate dominates the new point
         case 1 => // new point dominates candidate: swap-remove, don't advance
           buf(i) = buf(buf.length - 1)
           buf.remove(buf.length - 1)
@@ -58,6 +60,7 @@ object Gsky {
         "skyline would approach the input itself; raise the cap " +
         "explicitly if such an output is genuinely intended")
     buf += ((v, p))
+    true
   }
 
   /** Merge two skyline buffers (the "combiner"/partial-agg step).
@@ -89,13 +92,9 @@ object Gsky {
     buf
   }
 
-  /** Skyline over Rows that carry their normalized vector in an
-    * array<double> column at `skyIdx`. Used by the DataFrame operators.
+  /** The normalized vector a Row carries in an array<double> column at
+    * `skyIdx` (see SkylineOp.prepare).
     */
-  def skylineRows(rows: Iterator[Row], skyIdx: Int,
-      cap: Int = DefaultMaxBufferSize): Iterator[Row] =
-    skyline(rows.map(r => (vecOf(r, skyIdx), r)), cap).iterator.map(_._2)
-
   @inline def vecOf(r: Row, skyIdx: Int): Array[Double] = {
     val s = r.getSeq[Double](skyIdx)
     val n = s.length

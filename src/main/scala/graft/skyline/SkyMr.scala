@@ -36,7 +36,7 @@ import org.apache.spark.storage.StorageLevel
   *     re-emitted (the reference echoes `*` rows — an output quirk we do
   *     not keep).
   *
-  * Scale story vs [[SkylineOp.twoPhase]]: the final merge is parallel
+  * Scale story vs [[SkylineOp.skyline]]: the final merge is parallel
   * across cells instead of a single task, and the VPn/sky-filter pruning
   * bounds both the pre-filter survivors and the replication fanout —
   * this is the plan for anti-correlated / high-d data where local
@@ -68,8 +68,8 @@ object SkyMr {
     * (cell int + array<double> / array<double>). They are cell
     * metadata — dozens to thousands of rows — materialized from the
     * same single aggregate pass the pipeline already runs.
-    */
-  /** @param sampleFilterK 0 disables (default); K > 0 broadcasts the K
+    *
+    * @param sampleFilterK 0 disables (default); K > 0 broadcasts the K
     *   ascending-sum-strongest points of the SAMPLE's skyline as an
     *   extra row pre-filter ahead of phase 1 (sound: a row strictly
     *   dominated by any point cannot be in the global skyline; ties
@@ -105,7 +105,7 @@ object SkyMr {
     // prep feeds three passes (bounds agg, tree sample, routing) —
     // persist so the scan+filter+normalize runs once.
     // Deliberately NOT spread across more partitions when the input
-    // arrives under-partitioned (contrast SkylineOp.twoPhase): the
+    // arrives under-partitioned (contrast SkylineOp.skyline): the
     // phase-1 combiner's reduction improves with partition size —
     // fewer, bigger partitions emit fewer per-(partition, cell)
     // survivors into the keyed shuffle and phase 2. Interleaved A/B at

@@ -1,10 +1,8 @@
 package graft.skyline
 
-import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.DataFrame
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import graft.plans.SkycubePlan
 
 /** Skycube: the skyline of every non-empty subspace of the query
   * dimensions, each result row labeled with its subspace — the
@@ -18,13 +16,14 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * vector is a job parameter, Skyline.java:31); the cube is that
   * operator for every subspace — but NOT as 2^d − 1 separate jobs.
   *
-  * Plan shape — ONE scan, one survivors-only shuffle: phase 1 runs a
-  * GSKY buffer PER SUBSPACE per partition in a single `mapPartitions`
-  * (the multi-group combiner trick of [[SkylineOp.grouped]], with the
-  * projection varying per group instead of the key), emitting each
-  * subspace's local survivors tagged with the subspace mask. Phase 2
-  * shuffles survivors on the mask — so each subspace's final merge is
-  * an independent parallel task — and re-runs GSKY per mask. A
+  * Plan shape — ONE scan, one survivors-only shuffle, in the
+  * [[graft.plans.SkycubePlan]] → `SkycubeExec` operator that
+  * `SKYCUBE OF` also plans: phase 1 runs a GSKY buffer PER SUBSPACE per
+  * partition (the multi-group combiner trick of [[SkylineOp.grouped]],
+  * with the projection varying per group instead of the key), emitting
+  * each subspace's local survivors tagged with the subspace mask.
+  * Phase 2 shuffles survivors on the mask — so each subspace's final
+  * merge is an independent parallel task — and re-runs GSKY per mask. A
   * subspace skyline is NOT contained in the full-space skyline once
   * value ties exist (the classic distinct-value caveat), so every
   * subspace keeps its own full dominance pass; what is shared is the
@@ -44,68 +43,6 @@ object Skycube {
     require(spec.d <= 6,
       s"skycube fan-out is 2^d − 1 subspaces; d=${spec.d} > 6 — query " +
         "targeted subspaces instead")
-    val d = spec.d
-    val masks: Array[Int] = (1 until (1 << d)).toArray
-
-    val prep = graft.util.Partitioning.parallelize(
-      SkylineOp.prepare(df, spec))
-    val skyIdx = prep.schema.fieldIndex(SkylineOp.SKY)
-    // Output rows = mask + input row with SKY replaced by the
-    // PROJECTED vector, so downstream dominance is plain [[Dominance]]
-    // over dense arrays — no masked compares in the hot loop.
-    val outSchema = StructType(
-      StructField("__mask", IntegerType, nullable = false) +: prep.schema.fields)
-    val enc = Encoders.row(outSchema)
-
-    def project(v: Array[Double], mask: Int): Array[Double] = {
-      val out = new Array[Double](java.lang.Integer.bitCount(mask))
-      var i = 0; var j = 0
-      while (i < d) {
-        if ((mask & (1 << i)) != 0) { out(j) = v(i); j += 1 }
-        i += 1
-      }
-      out
-    }
-
-    // Phase 1: per-partition multi-subspace GSKY over the SFS-sorted
-    // input (full-dim sum presort; still a valid arrival order for
-    // every projection — eviction handles the rest).
-    val local = SkylineOp.sfsSorted(prep).mapPartitions { rows =>
-      val bufs = masks.map(m => m -> Gsky.emptyBuf[Row]).toMap
-      rows.foreach { r =>
-        val v = Gsky.vecOf(r, skyIdx)
-        masks.foreach { m => Gsky.insert(bufs(m), project(v, m), r) }
-      }
-      bufs.iterator.flatMap { case (m, buf) =>
-        buf.iterator.map { case (pv, r) =>
-          Row.fromSeq(m +: r.toSeq.updated(skyIdx, pv.toSeq))
-        }
-      }
-    }(enc)
-
-    // Phase 2: shuffle survivors by subspace; final GSKY per mask runs
-    // as its own task (parallel across the 2^d − 1 subspaces).
-    val maskIdx = 0
-    val projIdx = skyIdx + 1
-    val merged = local.repartition(col("__mask")).mapPartitions { rows =>
-      val bufs = new java.util.HashMap[Int, Gsky.Buf[Row]]()
-      rows.foreach { r =>
-        val m = r.getInt(maskIdx)
-        var buf = bufs.get(m)
-        if (buf == null) { buf = Gsky.emptyBuf[Row]; bufs.put(m, buf) }
-        Gsky.insert(buf, Gsky.vecOf(r, projIdx), r)
-      }
-      import scala.jdk.CollectionConverters._
-      bufs.values.asScala.iterator.flatMap(_.iterator.map(_._2))
-    }(enc)
-
-    val label = spec.dims.zipWithIndex
-      .map { case (dim, i) =>
-        when(col("__mask").bitwiseAND(lit(1 << i)) =!= 0, dim.col)
-      }
-    merged
-      .withColumn("subspace",
-        array_join(filter(array(label: _*), _.isNotNull), "+"))
-      .select(col("subspace") +: df.columns.map(col): _*)
+    SkylineOp.planned(df, spec)(SkycubePlan(_, _, _))
   }
 }

@@ -1,26 +1,35 @@
 package graft.skyline
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DateType, DoubleType, TimestampNTZType, TimestampType}
+
+import graft.plans.{OrderableDim, SkylinePlan}
+import graft.sql.SkylineSql
 
 /** Public skyline operator over DataFrames.
   *
   * Strategy choice:
-  *  - [[twoPhase]] (default): per-partition local skyline (map-side,
-  *    zero shuffle) → shuffle only the tiny local skylines to one task →
-  *    final merge. This is the right plan when the skyline is small
-  *    relative to the input (the overwhelmingly common case — weeks of
-  *    data, d ≲ 10). At 100 TB the phase-1 scan is embarrassingly
-  *    parallel and the shuffle moves only |partitions| × |local sky|
-  *    rows.
+  *  - [[skyline]] (default): a front end over the [[SkylinePlan]] →
+  *    `SkylineExec` operator that `SKYLINE OF` also plans —
+  *    per-partition local skyline (map-side, zero shuffle) → shuffle
+  *    only the tiny local skylines to one task → final merge. This is
+  *    the right plan when the skyline is small relative to the input
+  *    (the overwhelmingly common case — weeks of data, d ≲ 10). At
+  *    100 TB the phase-1 scan is embarrassingly parallel and the
+  *    shuffle moves only |partitions| × |local sky| rows.
   *  - [[graft.skyline.SkyMr]]: the reference's quadtree-partitioned
   *    SKY-MR plan, for hostile (anti-correlated / high-d) data where
   *    local skylines are large and the final merge needs real
   *    parallelism.
   *
-  * Semantics (both paths): strict Pareto dominance, ties kept, rows with
-  * any NULL/sentinel dim excluded — see [[SkylineSpec]].
+  * Semantics (all paths): strict Pareto dominance, ties kept, rows with
+  * any NULL/NaN/sentinel dim excluded — see [[SkylineSpec]]. Dims may be
+  * numeric (DECIMAL included), DATE, TIMESTAMP or TIMESTAMP_NTZ; any
+  * other type fails at analysis, naming the column ([[OrderableDim]]).
   */
 object SkylineOp {
 
@@ -30,16 +39,18 @@ object SkylineOp {
   /** Normalized (MIN-convention, sentinel→null) dim expressions.
     * Temporal types are mapped to their epoch numeric (order-preserving)
     * so dominance compares them like any other dim; the original column
-    * values pass through untouched in the output.
+    * values pass through untouched in the output. Each column is
+    * wrapped in [[OrderableDim]], so analysis rejects other types.
     */
   def normalizedDims(df: DataFrame, spec: SkylineSpec): Seq[Column] =
     spec.dims.map { dim =>
+      val c = ColumnBridge.column(OrderableDim(ColumnBridge.resolvedExpression(col(dim.col))))
       val base = df.schema(dim.col).dataType match {
-        case TimestampType => unix_micros(col(dim.col)).cast(DoubleType)
+        case TimestampType => unix_micros(c).cast(DoubleType)
         case TimestampNTZType =>
-          unix_micros(col(dim.col).cast(TimestampType)).cast(DoubleType)
-        case DateType => unix_date(col(dim.col)).cast(DoubleType)
-        case _ => col(dim.col).cast(DoubleType)
+          unix_micros(c.cast(TimestampType)).cast(DoubleType)
+        case DateType => unix_date(c).cast(DoubleType)
+        case _ => c.cast(DoubleType)
       }
       val nulled = dim.missing match {
         case Some(s) => when(base === lit(s), lit(null).cast(DoubleType)).otherwise(base)
@@ -61,39 +72,39 @@ object SkylineOp {
       .withColumn(SKY, array(dims: _*))
   }
 
-  def skyline(df: DataFrame, spec: SkylineSpec): DataFrame = twoPhase(df, spec)
+  /** Local-skyline-then-merge skyline, as a [[SkylinePlan]]: phase 1
+    * runs SFS-sorted GSKY per input partition with no shuffle; phase 2
+    * moves only the survivors (orders of magnitude smaller) into one
+    * task for the final GSKY. Being a Catalyst node, it gets column
+    * pruning ([[graft.plans.SkylineColumnPruning]]) and predicate
+    * pushdown like any other plan.
+    */
+  def skyline(df: DataFrame, spec: SkylineSpec): DataFrame =
+    planned(df, spec)(SkylinePlan(_, _, _))
 
-  /** SFS presort (sort-filter-skyline, Chomicki et al. '03): order each
-    * partition by ascending sum of the MIN-normalized dims before the
-    * GSKY pass. A dominator is ≤ in every normalized dim and < in at
-    * least one, so its sum is strictly smaller — it always sorts before
-    * its victims. Consequences: the insert buffer only ever grows (the
-    * eviction branch never fires), and the strongest dominators sit at
-    * the front of the buffer, so the dominated-check early-exit fires
-    * sooner. Measured 3.2× on the 9-dim GSOD shape (tools/SfsProbe:
-    * 21.2 s → 6.7 s over 200k points, identical skylines); the
-    * per-partition SortExec is spillable and order-independent of the
-    * result (skyline is a set).
+  /** Shared front end of [[skyline]] and [[Skycube.skycube]]: spread an
+    * under-partitioned input before the CPU-bound local pass (no-op at
+    * real scale; see Partitioning.parallelize), then plan `node` over
+    * it with the normalized dims, which are already MIN-convention
+    * (sign +1 each).
+    */
+  private[skyline] def planned(df: DataFrame, spec: SkylineSpec)(
+      node: (Seq[Expression], Seq[Int], LogicalPlan) => LogicalPlan): DataFrame = {
+    val in = graft.util.Partitioning.parallelize(df)
+    SkylineSql.ofPlan(in.sparkSession, node(
+      normalizedDims(in, spec).map(ColumnBridge.resolvedExpression),
+      Seq.fill(spec.d)(1),
+      in.queryExecution.analyzed))
+  }
+
+  /** SFS presort for the DataFrame paths that buffer external rows
+    * (grouped, Skyband, SkyMr): each partition in ascending sum of the
+    * MIN-normalized dims — the key, and the reasons it pays, of
+    * [[graft.plans.SkylineDims.sfsOrder]]. Measured 3.2× on the 9-dim
+    * GSOD shape (21.2 s → 6.7 s over 200k points, identical skylines).
     */
   private[skyline] def sfsSorted(prep: DataFrame): DataFrame =
     prep.sortWithinPartitions(aggregate(col(SKY), lit(0.0), (a, x) => a + x))
-
-  /** Local-skyline-then-merge plan. Phase 1 runs GSKY per input
-    * partition with no shuffle; phase 2 shuffles only the survivors
-    * (orders of magnitude smaller) into one task for the final GSKY.
-    * `repartition(1)` (not `coalesce(1)`) keeps phase 1 parallel.
-    */
-  def twoPhase(df: DataFrame, spec: SkylineSpec): DataFrame = {
-    // Spread an under-partitioned input before the CPU-bound local
-    // pass (no-op at real scale; see Partitioning.parallelize).
-    val prep = graft.util.Partitioning.parallelize(prepare(df, spec))
-    val enc = Encoders.row(prep.schema)
-    val skyIdx = prep.schema.fieldIndex(SKY)
-    val local = sfsSorted(prep).mapPartitions((it: Iterator[Row]) => Gsky.skylineRows(it, skyIdx))(enc)
-    val merged = sfsSorted(local.repartition(1))
-      .mapPartitions((it: Iterator[Row]) => Gsky.skylineRows(it, skyIdx))(enc)
-    merged.drop(SKY)
-  }
 
   /** Per-group skyline: one independent skyline per distinct value of
     * `groupCols` (e.g. "best events per (event_type, day)").
@@ -108,12 +119,12 @@ object SkylineOp {
     */
   def grouped(df: DataFrame, spec: SkylineSpec, groupCols: Seq[String]): DataFrame = {
     // No Partitioning.parallelize here: interleaved A/B on the sf0.1
-    // events workload (tools/EventsSkyProbe, min-of-3) measured the
-    // spread at 0.86-0.90s vs 0.44s without — the extra plan + input
-    // shuffle buys nothing because the phase-1 combiner is cheap at
-    // low d and the phase-2 repartition(groupCols) restores full
-    // parallelism regardless. The SFS sorts are kept: free at d=2
-    // (0.44s with == without), 3.2× at d=9 (tools/SfsProbe).
+    // events workload (min-of-3) measured the spread at 0.86-0.90s vs
+    // 0.44s without — the extra plan + input shuffle buys nothing
+    // because the phase-1 combiner is cheap at low d and the phase-2
+    // repartition(groupCols) restores full parallelism regardless. The
+    // SFS sorts are kept: free at d=2 (0.44s with == without), 3.2× at
+    // d=9.
     val prep = prepare(df, spec)
     val enc = Encoders.row(prep.schema)
     val skyIdx = prep.schema.fieldIndex(SKY)

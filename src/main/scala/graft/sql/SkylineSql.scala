@@ -1,6 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import graft.plans.{SkylineColumnPruning, SkylineSqlParser, SkylineStrategy}
 
@@ -28,9 +29,16 @@ object SkylineSql {
   }
 
   /** Run a SQL statement that may end in a `SKYLINE OF` clause. */
-  def sql(spark: SparkSession, sqlText: String): DataFrame = {
+  def sql(spark: SparkSession, sqlText: String): DataFrame =
+    ofPlan(spark, new SkylineSqlParser(spark.sessionState.sqlParser).parsePlan(sqlText))
+
+  /** Analyze `plan` into a DataFrame on a session that plans
+    * [[graft.plans.SkylinePlan]] / [[graft.plans.SkycubePlan]] — the
+    * common tail of this SQL surface and the DataFrame front ends
+    * ([[graft.skyline.SkylineOp.skyline]], [[graft.skyline.Skycube.skycube]]).
+    */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame = {
     register(spark)
-    val parser = new SkylineSqlParser(spark.sessionState.sqlParser)
-    DatasetBridge.ofRows(spark, parser.parsePlan(sqlText))
+    DatasetBridge.ofRows(spark, plan)
   }
 }

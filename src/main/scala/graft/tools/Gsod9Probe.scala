@@ -52,7 +52,8 @@ object Gsod9Probe {
     // Interleaved reps in one JVM to ride out the box's IO noise.
     // Findings (sf0.1, local[32], quietest rep): SkyMr 3parts 8.7 s <
     // 8parts 12.0 s < 32parts 19.0 s — map-side combine reduction
-    // beats raw pass-1 parallelism at d=9; twoPhase(32parts) ~20 s.
+    // beats raw pass-1 parallelism at d=9; the one-task-merge skyline
+    // (32parts) ~20 s.
     // Deeper trees (depth=6, sample=20k+) blow up replication: >10 min.
     val parsed = Gsod.parseLines(Gsod.formatLines(shaped))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -4,7 +4,7 @@ import scala.util.Random
 import graft.SparkSpec
 
 /** SKY-MR path: quadtree mechanics, cell-id algebra truth tables, and
-  * the SURVEY §7 equivalence promise — SkyMr ≡ twoPhase ≡ antiJoin on
+  * the SURVEY §7 equivalence promise — SkyMr ≡ skyline ≡ antiJoin on
   * random mixed-direction data (with duplicates/ties forced by small
   * integer domains).
   */
@@ -94,7 +94,7 @@ class SkyMrSpec extends SparkSpec {
       val df = rows.toDF("x", "y", "z", "k").repartition(5)
       val spec = SkylineSpec(Seq(SkyDim("x", Min), SkyDim("y", Max), SkyDim("z", Min)))
       val mr = canon(SkyMr.skyline(df, spec, maxp = 40, maxDepth = 4, sampleSize = 400))
-      val tp = canon(SkylineOp.twoPhase(df, spec))
+      val tp = canon(SkylineOp.skyline(df, spec))
       assert(mr == tp, s"trial $trial: SkyMr != twoPhase")
       if (trial == 1) assert(tp == canon(SkylineOp.antiJoin(df, spec)))
       // the sample-skyline pre-filter is a pure physical rewrite: same
@@ -137,7 +137,7 @@ class SkyMrSpec extends SparkSpec {
     // every filter point is itself non-dominated within the filter set's
     // own cell outputs — weaker sanity: it must not be dominated by the
     // global skyline in a way that excludes it from the data's bounds
-    val skyVecs = canon(SkylineOp.twoPhase(df, spec).select("x", "y"))
+    val skyVecs = canon(SkylineOp.skyline(df, spec).select("x", "y"))
       .map(r => Array(r(0).toString.toDouble, r(1).toString.toDouble))
     fl.foreach { f =>
       assert(f.length == 2)

@@ -53,7 +53,7 @@ class SkybandSpec extends SparkSpec {
     val pts = randPts(120, r)
     val band = Skyband.kSkyband(mkDf(pts), spec, 1).select("id")
       .collect().map(_.getLong(0)).toSet
-    val sky = SkylineOp.twoPhase(mkDf(pts), spec).select("id")
+    val sky = SkylineOp.skyline(mkDf(pts), spec).select("id")
       .collect().map(_.getLong(0)).toSet
     assert(band == sky)
   }
@@ -91,7 +91,7 @@ class SkybandSpec extends SparkSpec {
           .select("id").collect().map(_.getLong(0)).toSet
         assert(got == want, s"trial $trial k=$k")
       }
-      val sky = SkylineOp.twoPhase(mkDf(pts), spec).select("id")
+      val sky = SkylineOp.skyline(mkDf(pts), spec).select("id")
         .collect().map(_.getLong(0)).toSet
       val got3 = Skyband.kDominantSkyline(mkDf(pts), spec, 3)
         .select("id").collect().map(_.getLong(0)).toSet

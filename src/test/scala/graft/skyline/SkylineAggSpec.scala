@@ -15,7 +15,7 @@ class SkylineAggSpec extends SparkSpec {
       .toDF("x", "y", "id")
       .repartition(7) // force multiple partials
     val got = SkylineOp.viaAggregate(df, spec).select("id").as[Long].collect().toSet
-    val expected = SkylineOp.twoPhase(df, spec).select("id").as[Long].collect().toSet
+    val expected = SkylineOp.skyline(df, spec).select("id").as[Long].collect().toSet
     assert(got == expected)
     assert(got.nonEmpty)
   }
@@ -82,7 +82,7 @@ class SkylineAggSpec extends SparkSpec {
       (Double.NaN, 1.0, 4L)
     ).toDF("x", "y", "id")
     val got = SkylineOp.viaAggregate(df, spec).select("id").as[Long].collect().toSet
-    val expected = SkylineOp.twoPhase(df, spec).select("id").as[Long].collect().toSet
+    val expected = SkylineOp.skyline(df, spec).select("id").as[Long].collect().toSet
     assert(got == expected)
     assert(!got.contains(4L)) // NaN row excluded by prepare
   }

@@ -17,7 +17,7 @@ class SkylineOpSpec extends SparkSpec {
     val rows = Seq.fill(3000)((rnd.nextInt(40).toDouble, rnd.nextInt(40).toDouble, rnd.nextInt(8)))
     val df = rows.toDF("x", "y", "k").repartition(7)
     val spec = SkylineSpec(Seq(SkyDim("x", Min), SkyDim("y", Max)))
-    assert(canon(SkylineOp.twoPhase(df, spec)) == canon(SkylineOp.antiJoin(df, spec)))
+    assert(canon(SkylineOp.skyline(df, spec)) == canon(SkylineOp.antiJoin(df, spec)))
   }
 
   test("ties: equal-vector rows are all kept") {
