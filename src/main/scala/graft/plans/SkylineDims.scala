@@ -83,7 +83,7 @@ object SkylineDims {
     }
   }
 
-  /** Phase-2 merge: SFS-sort the survivors in memory, then GSKY. */
+  /** [[SkycubeExec]]'s per-subspace merge: SFS-sort the survivors in memory, then GSKY. */
   def sfsSkyline[P](points: Iterator[(Array[Double], P)]): Gsky.Buf[P] =
     Gsky.skyline(points.toArray.sortBy(_._1.sum).iterator)
 

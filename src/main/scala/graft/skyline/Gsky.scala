@@ -54,14 +54,19 @@ object Gsky {
         case _ => i += 1
       }
     }
-    if (buf.length >= cap) throw new IllegalStateException(
-      s"local skyline buffer exceeded $cap points — the input looks " +
-        "anti-correlated (all points mutually incomparable), so the " +
-        "skyline would approach the input itself; raise the cap " +
-        "explicitly if such an output is genuinely intended")
+    if (buf.length >= cap) throw overflow(cap)
     buf += ((v, p))
     true
   }
+
+  /** The blowup guard's error: a skyline buffer would hold more than
+    * `cap` points.
+    */
+  def overflow(cap: Int): IllegalStateException = new IllegalStateException(
+    s"local skyline buffer exceeded $cap points — the input looks " +
+      "anti-correlated (all points mutually incomparable), so the " +
+      "skyline would approach the input itself; raise the cap " +
+      "explicitly if such an output is genuinely intended")
 
   /** Merge two skyline buffers (the "combiner"/partial-agg step).
     * NOTE: BOTH input buffers are invalidated by this call — the larger

@@ -36,10 +36,12 @@ import org.apache.spark.storage.StorageLevel
   *     re-emitted (the reference echoes `*` rows — an output quirk we do
   *     not keep).
   *
-  * Scale story vs [[SkylineOp.skyline]]: the final merge is parallel
-  * across cells instead of a single task, and the VPn/sky-filter pruning
-  * bounds both the pre-filter survivors and the replication fanout —
-  * this is the plan for anti-correlated / high-d data where local
+  * Scale story vs [[SkylineOp.skyline]]: both merge in parallel; what
+  * sets this plan apart is its cell pruning. Pruned cells and the
+  * VPn/sky-filter drop points before the merge, and dominance-keyed
+  * replication sends a probe only to cells it may dominate, where
+  * [[SkylineOp.skyline]] sends every survivor's vector to every merge
+  * task. That pays on anti-correlated / high-d data where local
   * skylines grow with partition size. Driver-side state is O(sample +
   * cells·d), broadcast state likewise; no collect ever touches data
   * rows, only cell metadata.

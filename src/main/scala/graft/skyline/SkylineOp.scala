@@ -15,16 +15,17 @@ import graft.sql.SkylineSql
   * Strategy choice:
   *  - [[skyline]] (default): a front end over the [[SkylinePlan]] →
   *    `SkylineExec` operator that `SKYLINE OF` also plans —
-  *    per-partition local skyline (map-side, zero shuffle) → shuffle
-  *    only the tiny local skylines to one task → final merge. This is
-  *    the right plan when the skyline is small relative to the input
-  *    (the overwhelmingly common case — weeks of data, d ≲ 10). At
-  *    100 TB the phase-1 scan is embarrassingly parallel and the
-  *    shuffle moves only |partitions| × |local sky| rows.
+  *    per-partition local skyline (map-side, zero shuffle) → one
+  *    shuffle that spreads the local skylines over up to
+  *    `defaultParallelism` merge tasks as candidates, with every
+  *    survivor's vector replicated to each task as a probe → parallel
+  *    elimination (G-SKY-MR style). The shuffle moves the survivors
+  *    once plus m copies of their dim vectors, never the input.
   *  - [[graft.skyline.SkyMr]]: the reference's quadtree-partitioned
-  *    SKY-MR plan, for hostile (anti-correlated / high-d) data where
-  *    local skylines are large and the final merge needs real
-  *    parallelism.
+  *    SKY-MR plan. Its cell pruning (VPn, sky-filter, dominance-keyed
+  *    replication) drops points and probes before the merge, which
+  *    pays when local skylines are large (anti-correlated / high-d)
+  *    and most survivors fall in cells others dominate.
   *
   * Semantics (all paths): strict Pareto dominance, ties kept, rows with
   * any NULL/NaN/sentinel dim excluded — see [[SkylineSpec]]. Dims may be
@@ -74,10 +75,11 @@ object SkylineOp {
 
   /** Local-skyline-then-merge skyline, as a [[SkylinePlan]]: phase 1
     * runs SFS-sorted GSKY per input partition with no shuffle; phase 2
-    * moves only the survivors (orders of magnitude smaller) into one
-    * task for the final GSKY. Being a Catalyst node, it gets column
-    * pruning ([[graft.plans.SkylineColumnPruning]]) and predicate
-    * pushdown like any other plan.
+    * shuffles only the survivors and eliminates them in parallel, each
+    * merge task checking its share of the candidates against every
+    * survivor's vector ([[graft.plans.SkylineExec]]). Being a Catalyst
+    * node, it gets column pruning ([[graft.plans.SkylineColumnPruning]])
+    * and predicate pushdown like any other plan.
     */
   def skyline(df: DataFrame, spec: SkylineSpec): DataFrame =
     planned(df, spec)(SkylinePlan(_, _, _))
