@@ -13,8 +13,8 @@ import org.apache.spark.sql.execution.SparkPlan
   */
 object SkylineStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case sky @ SkylinePlan(_, _, child) =>
-      SkylineExec(sky.dims, planLater(child)) :: Nil
+    case sky: SkylinePlan =>
+      SkylineExec(sky.dims, sky.groupExprs, planLater(sky.child)) :: Nil
     case cube: SkycubePlan =>
       SkycubeExec(cube.dims, cube.dimNames, cube.subspaceAttr, planLater(cube.child)) :: Nil
     case _ => Nil
@@ -23,22 +23,22 @@ object SkylineStrategy extends SparkStrategy {
 
 /** Column pruning through [[SkylinePlan]]: when a Project above the
   * skyline uses a subset of the child's columns, push a Project BELOW
-  * the skyline keeping only (projected ∪ dim) columns — the scan then
-  * prunes to those columns (ReadSchema shrinks). Safe because skyline
-  * filters rows and never reads columns outside its dims. Registered
-  * through `spark.experimental`, the rule runs after the optimizer's
-  * own `ColumnPruning`, so it applies that rule to the new child
-  * itself: the Project then reaches the scan through operators such
-  * as the front ends' spreading repartition.
+  * the skyline keeping only (projected ∪ dim ∪ group key) columns — the
+  * scan then prunes to those columns (ReadSchema shrinks). Safe because
+  * skyline filters rows and never reads columns outside its dims and
+  * group keys. Registered through `spark.experimental`, the rule runs
+  * after the optimizer's own `ColumnPruning`, so it applies that rule
+  * to the new child itself: the Project then reaches the scan through
+  * operators such as the front ends' spreading repartition.
   */
 object SkylineColumnPruning extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case p @ Project(projectList, sky @ SkylinePlan(dimExprs, _, child))
-        if sky.resolved && p.resolved => {
-      val needed = p.references ++ AttributeSet(dimExprs.flatMap(_.references))
-      val keep = child.output.filter(needed.contains)
-      if (keep.length < child.output.length)
-        Project(projectList, sky.copy(child = ColumnPruning(Project(keep, child))))
+    case p @ Project(projectList, sky: SkylinePlan) if sky.resolved && p.resolved => {
+      val needed = p.references ++
+        AttributeSet((sky.dimExprs ++ sky.groupExprs).flatMap(_.references))
+      val keep = sky.child.output.filter(needed.contains)
+      if (keep.length < sky.child.output.length)
+        Project(projectList, sky.copy(child = ColumnPruning(Project(keep, sky.child))))
       else p
     }
     // Same push-through for the cube: subspace comes from the node

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Add, Ascending, Attribute, Cast, Expression, SortOrder, TaggingExpression, UnaryMinus, UnixDate, UnixMicros, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Add, Ascending, Attribute, Cast, Expression, RowOrdering, SortOrder, TaggingExpression, UnaryMinus, UnixDate, UnixMicros, UnsafeProjection}
 import org.apache.spark.sql.types.{DateType, DoubleType, NumericType, TimestampNTZType, TimestampType}
 
 import graft.skyline.Gsky
@@ -28,6 +28,24 @@ case class OrderableDim(child: Expression) extends TaggingExpression {
   override def prettyName: String = "skyline_dim"
 
   override protected def withNewChildInternal(newChild: Expression): OrderableDim =
+    copy(child = newChild)
+}
+
+/** Marks an expression as a skyline group key, so analysis rejects a
+  * type Spark cannot sort (MAP, VARIANT): [[SkylineExec]] sorts its
+  * input by the keys. [[graft.skyline.SkylineOp.grouped]] wraps every
+  * key in it, so such a key fails at analysis, naming the column.
+  */
+case class OrderableGroup(child: Expression) extends TaggingExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (RowOrdering.isOrderable(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"skyline group key ${child.sql} has type ${child.dataType.sql}, which Spark cannot sort")
+
+  override def prettyName: String = "skyline_group"
+
+  override protected def withNewChildInternal(newChild: Expression): OrderableGroup =
     copy(child = newChild)
 }
 

@@ -1,44 +1,57 @@
 package graft.plans
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.graftbridge.KeyBridge
 import graft.skyline.Gsky
-import SkylineExec.{merge, Routed}
+import SkylineExec.{localSkylines, merge, Routed}
 
 /** Physical operator for [[SkylinePlan]], and the one two-phase GSKY
-  * kernel behind both `SKYLINE OF` and [[graft.skyline.SkylineOp.skyline]]:
+  * kernel behind `SKYLINE OF`, [[graft.skyline.SkylineOp.skyline]] and
+  * [[graft.skyline.SkylineOp.grouped]]:
   *
-  *  - phase 1: per-partition local skyline (zero shuffle — the
-  *    reference's combiner trick, Skyline.java:408) over the child
-  *    sorted by the SFS key ([[SkylineDims.sfsOrder]]), which
-  *    `requiredChildOrdering` hands to Spark's spillable `SortExec`;
+  *  - phase 1: per-partition local skyline of each group (zero shuffle —
+  *    the reference's combiner trick, Skyline.java:408) over the child
+  *    sorted by (group keys…, SFS key [[SkylineDims.sfsOrder]]), which
+  *    `requiredChildOrdering` hands to Spark's spillable `SortExec`.
+  *    Each group is then one contiguous run, so one GSKY buffer is live
+  *    at a time, flushed when the key changes (SKY-MR's LSkyReducer);
   *  - phase 2: a parallel elimination over `m = min(phase-1 partitions,
   *    defaultParallelism)` merge tasks, after G-SKY-MR (SKY-MR's
-  *    GSkyMapper/GSkyReducer). Phase-1 task `pid` sends each survivor
-  *    once, as a candidate, to merge task `pid % m`, and one packed
-  *    block of its survivors' vectors, as probes, to every merge task.
-  *    A merge task keeps a candidate iff no probe dominates it
-  *    ([[SkylineExec.merge]]). One shuffle, one job.
+  *    GSkyMapper/GSkyReducer). Phase-1 task `pid` sends each survivor of
+  *    group `g` once, as a candidate, to merge task
+  *    `(hash(g) + pid) mod m`, and one packed block of the group's
+  *    survivors' vectors, as probes, to every merge task. A merge task
+  *    keeps a candidate iff no probe of its group dominates it
+  *    ([[SkylineExec.merge]], once per group held). One shuffle, one job.
+  *
+  * With no group expression every row shares the one empty key: the
+  * global skyline, through the same code.
   *
   * The merge is exact: a row that dominates a survivor is itself
-  * dominated by, or equal to, some phase-1 survivor (transitivity), so
-  * the survivors are all the probes a candidate needs.
+  * dominated by, or equal to, some phase-1 survivor of its group
+  * (transitivity), so those survivors are all the probes a candidate
+  * needs.
   *
   * Dim vectors come from [[SkylineDims.vectors]]; rows with a NULL/NaN
-  * dim are dropped (SkylineOp.prepare semantics).
+  * dim are dropped (SkylineOp.prepare semantics). Group keys compare as
+  * Spark's grouping does: NULL is a key of its own, and -0.0/0.0 and
+  * all NaNs are one key each.
   */
-case class SkylineExec(dims: Seq[(Expression, Int)], child: SparkPlan)
+case class SkylineExec(dims: Seq[(Expression, Int)], groupExprs: Seq[Expression], child: SparkPlan)
   extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
 
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(SkylineDims.sfsOrder(dims))
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
+    Seq(groupExprs.map(SortOrder(_, Ascending)) ++ SkylineDims.sfsOrder(dims))
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numInputRows" -> SQLMetrics.createMetric(sparkContext, "number of input rows"),
@@ -49,6 +62,7 @@ case class SkylineExec(dims: Seq[(Expression, Int)], child: SparkPlan)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (dims, input, d) = (this.dims, child.output, this.dims.length)
+    val keys = groupExprs.map(KeyBridge.normalizeFloats)
     val (numInput, numSurvivors, numProbes, numOutput, mergeTime) = (longMetric("numInputRows"),
       longMetric("numSurvivors"), longMetric("numProbes"), longMetric("numOutputRows"),
       longMetric("mergeTime"))
@@ -57,22 +71,17 @@ case class SkylineExec(dims: Seq[(Expression, Int)], child: SparkPlan)
 
     val routed = phase1.mapPartitionsWithIndex { (pid, it) =>
       val vecOf = SkylineDims.vectors(dims, input)
-      val buf = Gsky.emptyBuf[InternalRow]
-      var rows = 0L
-      it.foreach { row =>
-        val vec = vecOf(row)
-        if (vec != null) { rows += 1; SkylineDims.insertCopy(buf, vec, row) }
-      }
-      numInput += rows
-      numSurvivors += buf.length
-      if (buf.isEmpty) Iterator.empty
-      else {
-        numProbes += buf.length.toLong * m
-        val block = new Array[Double](buf.length * d)
-        var i = 0
-        while (i < buf.length) { System.arraycopy(buf(i)._1, 0, block, i * d, d); i += 1 }
-        Iterator.tabulate(m)(j => (j, Left(block): Routed)) ++
-          buf.iterator.map(p => (pid % m, Right(p._2): Routed))
+      localSkylines(it, UnsafeProjection.create(keys, input), vecOf, numInput).flatMap {
+        case (_, buf) if buf.isEmpty => Iterator.empty
+        case (key, buf) =>
+          numSurvivors += buf.length
+          numProbes += buf.length.toLong * m
+          val block = new Array[Double](buf.length * d)
+          var i = 0
+          while (i < buf.length) { System.arraycopy(buf(i)._1, 0, block, i * d, d); i += 1 }
+          val home = Math.floorMod(key.hashCode + pid, m)
+          Iterator.tabulate(m)(j => (j, Left((key, block)): Routed)) ++
+            buf.iterator.map(p => (home, Right(p._2): Routed))
       }
     }
 
@@ -80,7 +89,14 @@ case class SkylineExec(dims: Seq[(Expression, Int)], child: SparkPlan)
     routed.partitionBy(new HashPartitioner(m)).mapPartitions { it =>
       val start = System.nanoTime()
       val vecOf = SkylineDims.vectors(dims, input)
-      val out = merge(it.map(_._2), d, vecOf)
+      val keyOf = UnsafeProjection.create(keys, input)
+      val groups = mutable.HashMap.empty[UnsafeRow, ArrayBuffer[Either[Array[Double], InternalRow]]]
+      def group(key: UnsafeRow) = groups.getOrElseUpdate(key, ArrayBuffer.empty)
+      it.foreach {
+        case (_, Left((key, block))) => group(key) += Left(block)
+        case (_, Right(row)) => group(keyOf(row).copy()) += Right(row)
+      }
+      val out = groups.valuesIterator.flatMap(values => merge(values.iterator, d, vecOf)).toArray
       numOutput += out.length
       mergeTime += System.nanoTime() - start
       out.iterator
@@ -93,8 +109,28 @@ case class SkylineExec(dims: Seq[(Expression, Int)], child: SparkPlan)
 
 object SkylineExec {
 
-  /** A phase-2 shuffle value: a probe block, or one candidate row. */
-  private type Routed = Either[Array[Double], InternalRow]
+  /** A phase-2 shuffle value: a group's probe block, or one candidate row. */
+  private type Routed = Either[(UnsafeRow, Array[Double]), InternalRow]
+
+  /** Phase 1 over a partition sorted by group key: each run of equal
+    * keys becomes (key, its local skyline), one GSKY buffer at a time.
+    */
+  private def localSkylines(rows: Iterator[InternalRow], keyOf: UnsafeProjection,
+      vecOf: InternalRow => Array[Double], numInput: SQLMetric): Iterator[(UnsafeRow, Gsky.Buf[InternalRow])] =
+    new Iterator[(UnsafeRow, Gsky.Buf[InternalRow])] {
+      private var row = if (rows.hasNext) rows.next() else null
+      def hasNext: Boolean = row != null
+      def next(): (UnsafeRow, Gsky.Buf[InternalRow]) = {
+        val key = keyOf(row).copy()
+        val buf = Gsky.emptyBuf[InternalRow]
+        do {
+          val vec = vecOf(row)
+          if (vec != null) { numInput += 1; SkylineDims.insertCopy(buf, vec, row) }
+          row = if (rows.hasNext) rows.next() else null
+        } while (row != null && keyOf(row) == key)
+        (key, buf)
+      }
+    }
 
   /** Fixed-order sum of a vector: the SFS key of the phase-2 merge. */
   private def sum(v: Array[Double], from: Int, d: Int): Double = {

@@ -169,18 +169,16 @@ private[graft] object RegSkyline {
     },
 
 
-    // Same dominance semantics through the native Catalyst aggregate
-    // (SkylineAgg: TypedImperativeAggregate with partial/merge + kryo
-    // buffer serialization) — grouped by priority so the merge path
-    // crosses a real keyed exchange. This is the spill-safe/AQE form;
-    // the round-2 serialization bug lived here, so it faces the oracle,
-    // not just SkylineAggSpec.
+    // q_skyline_orders' dims, one skyline per priority: the grouped
+    // skyline (SkylineExec with the priority as its group key — phase 1
+    // per (partition × priority), phase 2 merges each priority's
+    // candidates against that priority's probes).
     "q_skyline_agg" -> { (s, dir) =>
       val o = Tables.load(s, dir, "orders")
         .select("o_orderpriority", "o_orderkey", "o_totalprice", "o_orderdate")
-      SkylineOp.viaAggregate(o,
+      SkylineOp.grouped(o,
         SkylineSpec(Seq(SkyDim("o_totalprice", Min), SkyDim("o_orderdate", Max))),
-        groupCols = Seq("o_orderpriority"))
+        Seq("o_orderpriority"))
         .select("o_orderpriority", "o_orderkey", "o_totalprice", "o_orderdate")
         .orderBy("o_orderpriority", "o_orderkey")
     },
@@ -239,11 +237,12 @@ private[graft] object RegSkyline {
 
 
     // Per-(event_type, day) skyline: highest-value, earliest events —
-    // the grouped skyline operator (map-side partial + one keyed
-    // shuffle; see SkylineOp.grouped).
+    // the grouped skyline (SkylineExec keyed by (event_type, day): one
+    // sorted local pass per partition, one survivors-only shuffle; see
+    // SkylineOp.grouped).
     "q_skyline_events" -> { (s, dir) =>
       val e = Tables.loadEvents(s, dir)
-        .select("event_id", "event_type", "value", "ts") // prune before the opaque op
+        .select("event_id", "event_type", "value", "ts")
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       SkylineOp.grouped(e,
         SkylineSpec(Seq(SkyDim("value", Max), SkyDim("ts", Min))),

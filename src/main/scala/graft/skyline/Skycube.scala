@@ -19,9 +19,10 @@ import graft.plans.SkycubePlan
   * Plan shape — ONE scan, one survivors-only shuffle, in the
   * [[graft.plans.SkycubePlan]] → `SkycubeExec` operator that
   * `SKYCUBE OF` also plans: phase 1 runs a GSKY buffer PER SUBSPACE per
-  * partition (the multi-group combiner trick of [[SkylineOp.grouped]],
-  * with the projection varying per group instead of the key), emitting
-  * each subspace's local survivors tagged with the subspace mask.
+  * partition, all live at once because every row feeds every subspace
+  * (unlike [[SkylineOp.grouped]], whose key-sorted input needs one
+  * buffer at a time), emitting each subspace's local survivors tagged
+  * with the subspace mask.
   * Phase 2 shuffles survivors on the mask — so each subspace's final
   * merge is an independent parallel task — and re-runs GSKY per mask. A
   * subspace skyline is NOT contained in the full-space skyline once

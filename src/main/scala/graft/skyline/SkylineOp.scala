@@ -1,26 +1,27 @@
 package graft.skyline
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DateType, DoubleType, TimestampNTZType, TimestampType}
 
-import graft.plans.{OrderableDim, SkylinePlan}
+import graft.plans.{OrderableDim, OrderableGroup, SkylinePlan}
 import graft.sql.SkylineSql
 
 /** Public skyline operator over DataFrames.
   *
   * Strategy choice:
-  *  - [[skyline]] (default): a front end over the [[SkylinePlan]] →
-  *    `SkylineExec` operator that `SKYLINE OF` also plans —
-  *    per-partition local skyline (map-side, zero shuffle) → one
-  *    shuffle that spreads the local skylines over up to
-  *    `defaultParallelism` merge tasks as candidates, with every
-  *    survivor's vector replicated to each task as a probe → parallel
-  *    elimination (G-SKY-MR style). The shuffle moves the survivors
-  *    once plus m copies of their dim vectors, never the input.
+  *  - [[skyline]] (default) and [[grouped]]: front ends over the
+  *    [[SkylinePlan]] → `SkylineExec` operator that `SKYLINE OF` also
+  *    plans — per-partition local skyline of each group (map-side, zero
+  *    shuffle; no group = one global skyline) → one shuffle that
+  *    spreads the local skylines over up to `defaultParallelism` merge
+  *    tasks as candidates, with every survivor's vector replicated to
+  *    each task as a probe of its group → parallel elimination
+  *    (G-SKY-MR style). The shuffle moves the survivors once plus m
+  *    copies of their dim vectors, never the input.
   *  - [[graft.skyline.SkyMr]]: the reference's quadtree-partitioned
   *    SKY-MR plan. Its cell pruning (VPn, sky-filter, dominance-keyed
   *    replication) drops points and probes before the merge, which
@@ -84,11 +85,11 @@ object SkylineOp {
   def skyline(df: DataFrame, spec: SkylineSpec): DataFrame =
     planned(df, spec)(SkylinePlan(_, _, _))
 
-  /** Shared front end of [[skyline]] and [[Skycube.skycube]]: spread an
-    * under-partitioned input before the CPU-bound local pass (no-op at
-    * real scale; see Partitioning.parallelize), then plan `node` over
-    * it with the normalized dims, which are already MIN-convention
-    * (sign +1 each).
+  /** Shared front end of [[skyline]], [[grouped]] and
+    * [[Skycube.skycube]]: spread an under-partitioned input before the
+    * CPU-bound local pass (no-op at real scale; see
+    * Partitioning.parallelize), then plan `node` over it with the
+    * normalized dims, which are already MIN-convention (sign +1 each).
     */
   private[skyline] def planned(df: DataFrame, spec: SkylineSpec)(
       node: (Seq[Expression], Seq[Int], LogicalPlan) => LogicalPlan): DataFrame = {
@@ -100,7 +101,7 @@ object SkylineOp {
   }
 
   /** SFS presort for the DataFrame paths that buffer external rows
-    * (grouped, Skyband, SkyMr): each partition in ascending sum of the
+    * (Skyband, SkyMr): each partition in ascending sum of the
     * MIN-normalized dims — the key, and the reasons it pays, of
     * [[graft.plans.SkylineDims.sfsOrder]]. Measured 3.2× on the 9-dim
     * GSOD shape (21.2 s → 6.7 s over 200k points, identical skylines).
@@ -109,65 +110,15 @@ object SkylineOp {
     prep.sortWithinPartitions(aggregate(col(SKY), lit(0.0), (a, x) => a + x))
 
   /** Per-group skyline: one independent skyline per distinct value of
-    * `groupCols` (e.g. "best events per (event_type, day)").
-    *
-    * Plan: map-side partial skyline per (partition × group) — the
-    * combiner trick from [[SkyMr]] — then one shuffle on the group key
-    * and a final per-group GSKY. Groups are processed independently
-    * within a partition via a hash map of buffers, so one task handles
-    * many groups (no one-task-per-group explosion); parallelism scales
-    * with the group-key cardinality, which is the natural partitioning
-    * at 100 TB.
+    * `groupCols` (e.g. "best events per (event_type, day)"), NULL
+    * being a value of its own — the same [[SkylinePlan]] as [[skyline]],
+    * with the columns as its group keys. Each key must be a type Spark
+    * can sort ([[graft.plans.OrderableGroup]]); a MAP column fails at
+    * analysis, naming it.
     */
-  def grouped(df: DataFrame, spec: SkylineSpec, groupCols: Seq[String]): DataFrame = {
-    // No Partitioning.parallelize here: interleaved A/B on the sf0.1
-    // events workload (min-of-3) measured the spread at 0.86-0.90s vs
-    // 0.44s without — the extra plan + input shuffle buys nothing
-    // because the phase-1 combiner is cheap at low d and the phase-2
-    // repartition(groupCols) restores full parallelism regardless. The
-    // SFS sorts are kept: free at d=2 (0.44s with == without), 3.2× at
-    // d=9.
-    val prep = prepare(df, spec)
-    val enc = Encoders.row(prep.schema)
-    val skyIdx = prep.schema.fieldIndex(SKY)
-    val gIdx = groupCols.map(prep.schema.fieldIndex)
-    def perGroupSky(it: Iterator[Row]): Iterator[Row] = {
-      val bufs = scala.collection.mutable.HashMap.empty[Seq[Any], Gsky.Buf[Row]]
-      it.foreach { r =>
-        val key = gIdx.map(r.get)
-        Gsky.insert(bufs.getOrElseUpdate(key, Gsky.emptyBuf[Row]), Gsky.vecOf(r, skyIdx), r)
-      }
-      bufs.valuesIterator.flatMap(_.iterator.map(_._2))
-    }
-    // SFS order is global, hence also ascending within every group —
-    // each group's buffer gets the no-eviction/early-exit benefit.
-    sfsSorted(prep)
-      .mapPartitions(perGroupSky _)(enc) // combiner: shuffle only local survivors
-      .repartition(groupCols.map(col): _*)
-      .transform(sfsSorted)
-      .mapPartitions(perGroupSky _)(enc)
-      .drop(SKY)
-  }
-
-  /** Skyline through the native Catalyst aggregate ([[SkylineAgg]]):
-    * `agg(skyline(vec, struct(*)))` → explode. The aggregate framework
-    * supplies partial (map-side) aggregation, spill-safe buffers and
-    * AQE integration; rows never leave InternalRow form until the
-    * final explode. Optionally grouped — each group gets its own
-    * independent skyline, all through one keyed exchange.
-    */
-  def viaAggregate(df: DataFrame, spec: SkylineSpec, groupCols: Seq[String] = Nil): DataFrame = {
-    val prep = graft.util.Partitioning.parallelize(prepare(df, spec))
-    val dataCols = prep.columns.filter(_ != SKY)
-    val rowStruct = struct(dataCols.map(col): _*)
-    val agg = SkylineAgg(col(SKY), rowStruct).as("__sky_rows")
-    val grouped =
-      if (groupCols.isEmpty) prep.agg(agg)
-      else prep.groupBy(groupCols.map(col): _*).agg(agg)
-    grouped
-      .select(explode(col("__sky_rows")).as("__sky_row"))
-      .select(dataCols.map(c => col(s"__sky_row.$c")): _*)
-  }
+  def grouped(df: DataFrame, spec: SkylineSpec, groupCols: Seq[String]): DataFrame =
+    planned(df, spec)(SkylinePlan(_, _, _,
+      groupCols.map(c => OrderableGroup(ColumnBridge.resolvedExpression(col(c))))))
 
   /** Declarative (anti-join) skyline, for small/medium inputs and as a
     * cross-check of the imperative paths: `p ∈ sky(T)` iff no `q ∈ T`

@@ -27,8 +27,8 @@ import graft.skyline.{Dominance, Gsky, SkylineOp, SkylineSpec}
   * correctly (the skyline of a set does not care when members arrive).
   * A retention watermark only matters for *windowed* streaming skylines,
   * where closed windows can be finalized and dropped; that variant is
-  * the batch [[SkylineOp.grouped]] over `window(ts, …)` run in a
-  * foreachBatch sink.
+  * the batch [[SkylineOp.grouped]] (one `SkylineExec` keyed by group
+  * and window) over `window(ts, …)` run in a foreachBatch sink.
   */
 object StreamingSkyline {
 

@@ -6,8 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into the `private[sql]` Column ↔ Expression converters —
   * Spark 4 removed the public `new Column(expr)` constructor, so a
-  * library registering its own Catalyst expressions (graft's
-  * SkylineAgg) needs this one-hop accessor in the sql package.
+  * library wrapping its own Catalyst expressions in Columns (graft's
+  * DominatesExpr, OrderableDim) needs this one-hop accessor in the sql
+  * package.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -45,4 +46,14 @@ object DatasetBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+}
+
+/** Same one-hop pattern for the `private[sql]` float-key normalizer
+  * (-0.0 → 0.0, one NaN) Spark applies to grouping and join keys, so a
+  * key compared as bytes groups the way `GROUP BY` does.
+  */
+object KeyBridge {
+  def normalizeFloats(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 }

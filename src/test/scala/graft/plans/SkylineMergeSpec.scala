@@ -7,6 +7,7 @@ import org.apache.spark.graftbridge.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.SparkSpec
@@ -14,9 +15,10 @@ import graft.skyline.{Gsky, SkylineOp, SkylineSpec}
 import graft.sql.SkylineSql
 
 /** [[SkylineExec]]'s parallel phase-2 merge: exact on floating-point
-  * ties, infinities and duplicates at any partitioning, observable
-  * through its SQL metrics, guarded against blowup, and one job whose
-  * last stage runs `m = min(partitions, defaultParallelism)` tasks.
+  * ties, infinities, duplicates and groups at any partitioning,
+  * observable through its SQL metrics, guarded against blowup, and one
+  * job whose last stage runs `m = min(partitions, defaultParallelism)`
+  * tasks, global or grouped.
   */
 class SkylineMergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -96,6 +98,19 @@ class SkylineMergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assertExact("anti d=5", points)
   }
 
+  test("a seeded grouped anti-correlated d=5 set, per group") {
+    val points = antiCorrelated(3000, 5, 19)
+    // Square residues mod 7: four groups of unequal size.
+    val expected = points.indices.groupBy(i => i.toLong * i % 7).values.flatMap { is =>
+      Gsky.bruteForce(is.map(i => (points(i), i.toLong))).map(_._2)
+    }.toSet
+    val spec = SkylineSpec.min((0 until 5).map(i => s"d$i"): _*)
+    Seq(1, 2, 3, 7, 10).foreach { parts =>
+      val df = frame(points, 5, parts).withColumn("g", col("id") * col("id") % 7)
+      assert(ids(SkylineOp.grouped(df, spec, Seq("g"))) == expected, s"grouped at $parts")
+    }
+  }
+
   test("SQL metrics: input, survivors, probes, output and merge time") {
     val points = antiCorrelated(2000, 4, 11) :+ Array(Double.NaN, 0.0, 0.0, 0.0)
     val df = frame(points, 4, 8)
@@ -139,7 +154,8 @@ class SkylineMergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(m > 1)
       Seq(
         () => SkylineOp.skyline(df, SkylineSpec.min("d0", "d1", "d2")),
-        () => SkylineSql.sql(spark, "SELECT * FROM sky_stages SKYLINE OF d0 MIN, d1 MIN, d2 MIN")
+        () => SkylineSql.sql(spark, "SELECT * FROM sky_stages SKYLINE OF d0 MIN, d1 MIN, d2 MIN"),
+        () => SkylineOp.grouped(df.withColumn("g", col("id") % 4), SkylineSpec.min("d0", "d1", "d2"), Seq("g"))
       ).foreach { query =>
         val q = query()
         ListenerBusBridge.waitUntilEmpty(spark.sparkContext, 10000)
@@ -150,7 +166,10 @@ class SkylineMergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         } finally spark.sparkContext.removeSparkListener(listener)
         val started = lastStageTasks.synchronized { val s = lastStageTasks.toList; lastStageTasks.clear(); s }
         assert(started == List(m), s"$parts partitions: last-stage tasks per job $started")
-        assert(q.queryExecution.executedPlan.execute().getNumPartitions == m)
+        val plan = q.queryExecution.executedPlan
+        assert(plan.execute().getNumPartitions == m)
+        assert(collect(plan) { case s: SkylineExec => s }.size == 1, plan)
+        assert(collect(plan) { case p if Set("DeserializeToObject", "MapPartitions")(p.nodeName) => p }.isEmpty, plan)
       }
     }
   }

@@ -16,10 +16,11 @@ import graft.SparkSpec
 import graft.skyline.{Max, Min, SkyDim, Skycube, SkylineOp, SkylineSpec}
 import graft.sql.SkylineSql
 
-/** The DataFrame front ends ([[SkylineOp.skyline]], [[Skycube.skycube]])
-  * and the SQL clauses (`SKYLINE OF`, `SKYCUBE OF`) run one operator:
-  * same answers, one [[SkylineExec]] / [[SkycubeExec]] per plan, the
-  * same dim type checks, and column pruning through the node.
+/** The DataFrame front ends ([[SkylineOp.skyline]], [[SkylineOp.grouped]],
+  * [[Skycube.skycube]]) and the SQL clauses (`SKYLINE OF`, `SKYCUBE OF`)
+  * run one operator: same answers, one [[SkylineExec]] / [[SkycubeExec]]
+  * per plan, the same dim and group key type checks, and column pruning
+  * through the node.
   */
 class SkylineOperatorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -152,5 +153,39 @@ class SkylineOperatorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val scans = collect(q.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
     assert(scans.nonEmpty)
     scans.foreach(s => assert(s.requiredSchema.fieldNames.toSet == Set("id", "a", "b"), s))
+  }
+
+  test("SkylineOp.grouped(wideParquet, g).select(id) reads only id, the dims and g") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sky_group_prune").toString
+    (1L to 200L).map(i => (i, s"g${i % 3}", (i * 7 % 50).toDouble, (i * 13 % 50).toDouble, s"w$i", i * 3))
+      .toDF("id", "g", "a", "b", "wide1", "wide2")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val spec = SkylineSpec.min("a", "b")
+    val q = SkylineOp.grouped(spark.read.parquet(dir), spec, Seq("g")).select("id")
+    val expected = (0 until 3).flatMap { k =>
+      ids(SkylineOp.antiJoin(spark.read.parquet(dir).filter(col("g") === s"g$k"), spec))
+    }.toSet
+    assert(ids(q) == expected)
+    val scans = collect(q.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty)
+    scans.foreach(s => assert(s.requiredSchema.fieldNames.toSet == Set("id", "a", "b", "g"), s))
+  }
+
+  test("a group key Spark cannot sort fails at analysis, naming the column, before any job runs") {
+    val df = Seq((1L, 1.0, 2.0), (2L, 2.0, 1.0)).toDF("id", "a", "b")
+      .withColumn("tags", map(lit("k"), col("id")))
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ListenerBusBridge.waitUntilEmpty(spark.sparkContext, 10000)
+      val before = jobs.get
+      val e = intercept[AnalysisException](SkylineOp.grouped(df, SkylineSpec.min("a", "b"), Seq("id", "tags")))
+      assert(e.getMessage.contains("tags") && e.getMessage.contains("MAP"), e.getMessage)
+      ListenerBusBridge.waitUntilEmpty(spark.sparkContext, 10000)
+      assert(jobs.get == before)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
