@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * engines at the boundary circle.
   *
   * The reference engine has no spatial surface; this extends its
-  * grid-partitioned skyline machinery (SkyMr.scala's cell routing,
+  * grid-partitioned skyline machinery (SkyMr's QuadTreeRouting,
   * ReverseSkyline.scala's box join) to proximity queries, which a
   * multimodal curation pipeline needs for geo-dedup and near-duplicate
   * sensor sweeps.

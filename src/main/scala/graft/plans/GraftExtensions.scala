@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.SparkPlan
 object SkylineStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case sky: SkylinePlan =>
-      SkylineExec(sky.dims, sky.groupExprs, planLater(sky.child)) :: Nil
+      SkylineExec(sky.dims, sky.groupExprs, planLater(sky.child), sky.routing) :: Nil
     case cube: SkycubePlan =>
       SkycubeExec(cube.dims, cube.dimNames, cube.subspaceAttr, planLater(cube.child)) :: Nil
     case _ => Nil

@@ -16,9 +16,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
   * group expression means one global skyline. Output = child output —
   * skyline filters rows, never reshapes them. Rows with a NULL/NaN dim
   * are excluded, matching [[graft.skyline.SkylineOp.prepare]].
+  * `routing` places the merge's work ([[SkylineRouting]]); it never
+  * changes the result.
   */
 case class SkylinePlan(dimExprs: Seq[Expression], signs: Seq[Int], child: LogicalPlan,
-    groupExprs: Seq[Expression] = Nil)
+    groupExprs: Seq[Expression] = Nil, routing: SkylineRouting = SkylineRouting.AllTasks)
   extends UnaryNode {
 
   def dims: Seq[(Expression, Int)] = dimExprs.zip(signs)

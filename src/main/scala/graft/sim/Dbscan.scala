@@ -28,7 +28,7 @@ import graft.operators.SpatialJoin
   * a density-filtered subgraph.
   *
   * The reference engine has no clustering surface; this extends its
-  * grid-partitioned cell routing (SkyMr.scala:212) from dominance
+  * grid-partitioned cell routing (SkyMr's QuadTreeRouting) from dominance
   * pruning to density connectivity.
   */
 object Dbscan {

@@ -6,8 +6,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Mirrors the reference's QTNode (QTNode.java:49-100, inline copy
   * Skyline.java:120-171) re-expressed for Spark: the tree is built on the
-  * driver over a SAMPLE of normalized vectors, then broadcast; executors
-  * only call [[Tree.route]].
+  * driver over a SAMPLE of normalized vectors and ships with the plan;
+  * executors only call [[Tree.route]] and [[Tree.probeLeaves]].
   *
   * Semantics kept from the reference:
   *  - 2^d fanout at midpoints; a point routes to the upper half of dim k
@@ -67,6 +67,49 @@ object QuadTree {
         }
       }
       -1 // unreachable
+    }
+
+    /** Calls `visit` with the ordinal of every leaf that may hold a
+      * point `v` dominates: the descent enters a lower child on dim k
+      * only while v(k) < mid(k), since its points all lie below mid(k).
+      * An upper child bounds nothing from above (the root's top is
+      * closed at the exact maximum), and nothing routes above a NaN
+      * mid, whose lower child is therefore unbounded. The leaves
+      * visited are exactly those whose region reaches v's upper orthant,
+      * so [[CellAlgebra.mayDominate]] holds from v's own leaf to each:
+      * two leaves' dim-k codes part at a split value both paths share.
+      */
+    def probeLeaves(v: Array[Double])(visit: Int => Unit): Unit = {
+      def go(node: Node): Unit = node match {
+        case null =>
+        case Leaf(_, ord) => visit(ord)
+        case Internal(mid, children) =>
+          var upper = 0
+          var free = 0
+          var k = 0
+          while (k < d) {
+            if (v(k) >= mid(k)) upper |= 1 << k else if (v(k) < mid(k)) free |= 1 << k
+            k += 1
+          }
+          var sub = free
+          var more = true
+          while (more) {
+            go(children(upper | sub))
+            more = sub != 0
+            sub = (sub - 1) & free
+          }
+      }
+      go(root)
+    }
+
+    /** Children the build pruned (see the class doc): no point routes there. */
+    def prunedCells: Int = {
+      def go(node: Node): Int = node match {
+        case null => 1
+        case Leaf(_, _) => 0
+        case Internal(_, children) => children.iterator.map(go).sum
+      }
+      go(root)
     }
   }
 

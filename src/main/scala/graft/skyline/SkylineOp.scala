@@ -23,10 +23,12 @@ import graft.sql.SkylineSql
   *    (G-SKY-MR style). The shuffle moves the survivors once plus m
   *    copies of their dim vectors, never the input.
   *  - [[graft.skyline.SkyMr]]: the reference's quadtree-partitioned
-  *    SKY-MR plan. Its cell pruning (VPn, sky-filter, dominance-keyed
-  *    replication) drops points and probes before the merge, which
-  *    pays when local skylines are large (anti-correlated / high-d)
-  *    and most survivors fall in cells others dominate.
+  *    SKY-MR plan, on the same operator: one eager bounds+sample job
+  *    builds a quadtree on the driver, and the tree routes the merge.
+  *    Pruned cells and the optional sample prunes drop rows before
+  *    phase 1, and each survivor probes only the merge tasks holding a
+  *    leaf it may dominate, which pays when local skylines are large
+  *    (anti-correlated / high-d) and survivors spread over many leaves.
   *
   * Semantics (all paths): strict Pareto dominance, ties kept, rows with
   * any NULL/NaN/sentinel dim excluded — see [[SkylineSpec]]. Dims may be
@@ -100,8 +102,8 @@ object SkylineOp {
       in.queryExecution.analyzed))
   }
 
-  /** SFS presort for the DataFrame paths that buffer external rows
-    * (Skyband, SkyMr): each partition in ascending sum of the
+  /** SFS presort for the DataFrame path that buffers external rows
+    * (Skyband): each partition in ascending sum of the
     * MIN-normalized dims — the key, and the reasons it pays, of
     * [[graft.plans.SkylineDims.sfsOrder]]. Measured 3.2× on the 9-dim
     * GSOD shape (21.2 s → 6.7 s over 200k points, identical skylines).

@@ -121,30 +121,30 @@ class SkyMrSpec extends SparkSpec {
     assert(canon(SkyMr.skyline(df, spec).select("tag")).flatten == Seq("a", "b"))
   }
 
-  test("VPn/sky-filter side outputs: one VPn per occupied cell; filters dominate-bound the data") {
+  test("SkyMr leaves nothing cached") {
     val rnd = new Random(23)
-    val rows = Seq.fill(2000)((rnd.nextInt(40).toDouble, rnd.nextInt(40).toDouble, rnd.nextInt(9)))
-    val df = rows.toDF("x", "y", "k").repartition(4)
-    val spec = SkylineSpec(Seq(SkyDim("x", Min), SkyDim("y", Min)))
-    val (sky, vpns, filters) =
-      SkyMr.skylineWithSummaries(df, spec, maxp = 50, maxDepth = 4, sampleSize = 500)
-    assert(sky.count() > 0)
-    val vpnRows = vpns.collect()
-    assert(vpnRows.nonEmpty && vpnRows.forall(_.getSeq[Double](1).length == 2))
-    assert(vpnRows.map(_.getInt(0)).distinct.length == vpnRows.length) // one per cell
-    val fl = filters.collect().map(_.getSeq[Double](0))
-    assert(fl.nonEmpty)
-    // every filter point is itself non-dominated within the filter set's
-    // own cell outputs — weaker sanity: it must not be dominated by the
-    // global skyline in a way that excludes it from the data's bounds
-    val skyVecs = canon(SkylineOp.skyline(df, spec).select("x", "y"))
-      .map(r => Array(r(0).toString.toDouble, r(1).toString.toDouble))
-    fl.foreach { f =>
-      assert(f.length == 2)
-      // a filter point is a real local-skyline point: nothing in the
-      // global skyline strictly dominates it in BOTH dims with margin
-      // beyond the data grid — sanity-check it lies within data bounds.
-      assert(f.forall(v => v >= 0 && v < 40))
+    val df = Seq.fill(2000)((rnd.nextInt(40).toDouble, rnd.nextInt(40).toDouble)).toDF("x", "y")
+      .repartition(4)
+    spark.catalog.clearCache()
+    assert(SkyMr.skyline(df, SkylineSpec.min("x", "y"), maxp = 50).collect().nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("quadtree probe descent: every leaf a dominated point sits in, and only leaves it may dominate") {
+    val rnd = new Random(31)
+    Seq(2, 3, 5).foreach { d =>
+      // small integer grid: ties on split values and on the top bound
+      val pts = Array.fill(400)(Array.fill(d)(rnd.nextInt(8).toDouble))
+      val tree = QuadTree.build(pts, Array.fill(d)(0.0), Array.fill(d)(7.0), maxp = 4, maxDepth = 5)
+      pts.filter(tree.route(_) >= 0).foreach { v =>
+        val own = tree.leafIds(tree.route(v))
+        val reached = scala.collection.mutable.Set.empty[Int]
+        tree.probeLeaves(v)(reached += _)
+        reached.foreach(l => assert(CellAlgebra.mayDominate(own, tree.leafIds(l), d)))
+        pts.filter(w => Dominance.dominates(v, w) && tree.route(w) >= 0).foreach { w =>
+          assert(reached(tree.route(w)), s"d=$d: ${v.toSeq} misses the leaf of ${w.toSeq}")
+        }
+      }
     }
   }
 
